@@ -1296,7 +1296,7 @@ class Catalog:
         tbl = self.tables.get(name)
         declared = {
             f.name: f.dataType
-            for f in (tbl.df() if tbl is not None else rows).schema.fields
+            for f in (tbl.schema if tbl is not None else rows.schema).fields
         }
         return rows.select(*[
             F.expr(gen[f.name]).cast(declared[f.name]).alias(f.name)
@@ -1423,7 +1423,7 @@ class Catalog:
             # "a" must not clobber column "a_b"'s instantiated
             # "a_b_*" checks (self-review r13)
             try:
-                current = list(self.tables[tname].df().columns)
+                current = list(self.tables[tname].schema.names)
             except Exception:
                 current = []
             others = [c2 for c2 in current if c2 not in (col, new)]
@@ -1662,11 +1662,7 @@ class Catalog:
                     f"constraint on {name} matches the arbiter columns "
                     "(PG requires an arbiter index)"
                 )
-        base = (
-            self._txn.get(name, table.df())
-            if self._txn is not None
-            else table.df()
-        )
+        base = self._live_df(name)
         # incoming rows: same body forms as plain INSERT (column list +
         # VALUES/SELECT, positional alignment to the table schema)
         body = body.strip()
@@ -1928,11 +1924,7 @@ class Catalog:
         from otterbrix_spark.operators.dml import ConstraintViolation
 
         table = self.tables[name]
-        base = (
-            self._txn.get(name, table.df())
-            if self._txn is not None
-            else table.df()
-        )
+        base = self._live_df(name)
         alias = src_alias or src_name
         src = self.spark.table(src_name)
         # localCheckpoint PINS the row ids: the tagged frame feeds three
@@ -2001,11 +1993,7 @@ class Catalog:
         one semi-join on the predicate, one anti-join for survivors —
         the delete-matched half of a lakehouse MERGE."""
         table = self.tables[name]
-        base = (
-            self._txn.get(name, table.df())
-            if self._txn is not None
-            else table.df()
-        )
+        base = self._live_df(name)
         talias = tgt_alias or name
         salias = src_alias or src_name
         src = self.spark.table(src_name)
@@ -2065,11 +2053,7 @@ class Catalog:
         from otterbrix_spark.operators.dml import ConstraintViolation
 
         table = self.tables[name]
-        base = (
-            self._txn.get(name, table.df())
-            if self._txn is not None
-            else table.df()
-        )
+        base = self._live_df(name)
         t_alias = t_alias or name
         src_alias = src_alias or src_name
         src = self.spark.table(src_name)
@@ -2457,7 +2441,7 @@ class Catalog:
         for name in doomed:
             table = self.tables[name]
             if self._txn is not None:
-                base = self._txn.get(name, table.df())
+                base = self._live_df(name)
                 empty = base.filter(F.lit(False))
                 self._txn[name] = empty
                 empty.createOrReplaceTempView(name)
@@ -2692,10 +2676,7 @@ class Catalog:
         from pyspark.sql import Window
 
         table = self.tables[name]
-        base = (
-            self._txn.get(name, table.df())
-            if self._txn is not None else table.df()
-        )
+        base = self._live_df(name)
         cols = [f.name for f in base.schema.fields]
         match = _reduce(_and, [
             F.col(c).isNull() if row[c] is None
@@ -3043,9 +3024,7 @@ class Catalog:
             )
             if mu and not scroll and mu.group(2) in self.tables:
                 tname = mu.group(2)
-                tcols = [
-                    f.name for f in self.tables[tname].df().schema.fields
-                ]
+                tcols = self.tables[tname].schema.names
                 sel = mu.group(1).strip()
                 want = (
                     tcols if sel == "*"
@@ -3501,9 +3480,9 @@ class Catalog:
                 tname, _, col = target.rpartition(".")
                 tname = tname.replace(".", "__")
                 if tname in self.tables:
-                    kind, cols = "r", self.tables[tname].df().columns
+                    kind, cols = "r", self.tables[tname].schema.names
                 elif tname in self.dynamic:
-                    kind, cols = "g", self.dynamic[tname].df().columns
+                    kind, cols = "g", self.dynamic[tname].schema().names
                 else:
                     raise ValueError(f"unknown table: {tname}")
                 if col not in cols:
@@ -4561,7 +4540,7 @@ class Catalog:
                     "table"
                 )
             empty = self.spark.createDataFrame(
-                [], self.tables[src].df().schema
+                [], self.tables[src].schema
             ).repartition(1)
             path = os.path.join(self.base_dir, name.replace(".", "__"))
             table = ManagedTable.create(self.spark, path, empty, name)
@@ -5063,7 +5042,7 @@ class Catalog:
                 }
             sets = _resolve_set_targets(set_texts)
             if self._txn is not None:
-                base = self._txn.get(name, table.df())
+                base = self._live_df(name)
                 new_df, matched = apply_update(base, cond, sets)
                 if gen:
                     # recompute from the NEW row values (SET exprs above
@@ -5113,7 +5092,7 @@ class Catalog:
             table = self.tables[name]
             cond = F.expr(where) if where else F.lit(True)
             if self._txn is not None:
-                base = self._txn.get(name, table.df())
+                base = self._live_df(name)
                 # FK semantics first: restrict raises before anything stages;
                 # cascades stage the surviving child frames alongside
                 for child_name, new_child in self._fk_on_delete(name, base, cond):
@@ -5180,16 +5159,20 @@ class Catalog:
                     ).localCheckpoint(eager=True)
                 n = rows.count()  # cheap: counts the pinned checkpoint
                 return self.spark.range(1).select(F.lit(n).alias("inserted"))
-            dyn.insert(rows)  # schema-on-write: new columns extend the table
+            n = dyn.insert(rows)  # schema-on-write: new columns extend the table
             dyn.df().createOrReplaceTempView(name)
             if returning:
                 return self._apply_returning(rows, returning)
-            return self.spark.range(1).select(F.lit(rows.count()).alias("inserted"))
+            return self.spark.range(1).select(F.lit(n).alias("inserted"))
 
         m = self._match_protected(_INSERT, sql)
         if m and m[0] in self.tables:
             name, body, returning = m
             table = self.tables[name]
+            # one schema lookup for the whole statement (memoised per
+            # table version, so no footer-inference job on a warm table)
+            schema = table.schema
+            columns = schema.names
             body = body.strip()
             # optional explicit column list: INSERT INTO t (a, b) VALUES/SELECT
             cols = None
@@ -5237,7 +5220,7 @@ class Catalog:
                 # row (the drop-then-refill form double-consumed when a
                 # tuple already said DEFAULT — self-review r11 loop 2)
                 body = _values_set_default(
-                    body, cols or list(table.df().columns), idc_all
+                    body, cols or columns, idc_all
                 )
                 user_handled = True
             ids = self.identity_always.get(name, set())
@@ -5250,7 +5233,7 @@ class Catalog:
                 # cannot confuse the guard, and the DEFAULT keyword stays
                 # legal in any tuple position
                 target_cols = (
-                    cols if cols is not None else list(table.df().columns)
+                    cols if cols is not None else columns
                 )
                 if body.upper().startswith("VALUES"):
                     bad = _values_explicit_identity(body, target_cols, ids)
@@ -5273,7 +5256,7 @@ class Catalog:
                             if f.name in dfl
                             else F.lit(None)
                         ).cast(f.dataType).alias(f.name)
-                        for f in table.df().schema.fields
+                        for f in schema.fields
                     ]
                 )
                 cols = None
@@ -5283,17 +5266,17 @@ class Catalog:
                     # PG: positional VALUES target the non-generated
                     # columns only (generated columns have no INSERT slot)
                     cols = [
-                        c for c in table.df().columns if c not in gen_all
+                        c for c in columns if c not in gen_all
                     ]
                 body = self._fold_values_defaults(name, body, cols)
                 rows = _values_frame(self.spark, body)
-                if not cols and len(rows.columns) < len(table.df().columns):
+                if not cols and len(rows.columns) < len(columns):
                     # PG: a short VALUES row list targets the leading
                     # columns; the rest take their DEFAULT (or NULL)
-                    cols = table.df().columns[: len(rows.columns)]
+                    cols = columns[: len(rows.columns)]
                 if auto_skip and len(rows.columns) < len(cols):
                     cols = cols[: len(rows.columns)]
-                rows = rows.toDF(*(cols or table.df().columns))
+                rows = rows.toDF(*(cols or columns))
             else:
                 rows = self.spark.sql(body)
                 if cols:
@@ -5302,7 +5285,7 @@ class Catalog:
                     # SELECT source, no column list: positions map to the
                     # non-generated columns (PG)
                     cols = [
-                        c for c in table.df().columns if c not in gen_all
+                        c for c in columns if c not in gen_all
                     ][: len(rows.columns)]
                     rows = rows.toDF(*cols)
             if overriding == "USER" and idc_all and not user_handled:
@@ -5311,7 +5294,7 @@ class Catalog:
                 # reorder below refills them from the sequence default
                 if cols is None:
                     rows = rows.toDF(
-                        *table.df().columns[: len(rows.columns)]
+                        *columns[: len(rows.columns)]
                     )
                     cols = list(rows.columns)
                 keep = [c for c in cols if c not in idc_all]
@@ -5332,18 +5315,18 @@ class Catalog:
                             if f.name in dfl
                             else F.lit(None)
                         ).cast(f.dataType).alias(f.name)
-                        for f in table.df().schema.fields
+                        for f in schema.fields
                     ]
                 )
             # positional alignment to the table schema (PG semantics: INSERT
             # ... SELECT matches by position, not by source column name) —
             # also what makes constraint exprs resolve against table names
-            rows = rows.toDF(*table.df().columns)
+            rows = rows.toDF(*columns)
             # stored generated columns compute LAST, from the fully
             # defaulted row (PG ExecComputeStoredGenerated)
             rows = self._recompute_generated(name, rows)
             if self._txn is not None:
-                base = self._txn.get(name, table.df())
+                base = self._live_df(name)
                 # coerce to the declared schema (mirrors ManagedTable.insert)
                 # so a txn INSERT can't silently widen column types via union
                 rows = rows.select(
@@ -5473,9 +5456,9 @@ class Catalog:
                 ))
 
         for name, t in sorted(self.tables.items()):
-            add_class(name, "r", t.df().schema.fields)
+            add_class(name, "r", t.schema.fields)
         for name, d in sorted(self.dynamic.items()):
-            add_class(name, "g", d.df().schema.fields)
+            add_class(name, "g", d.schema().fields)
         for name, mv in sorted(self.matviews.items()):
             add_class(name, "m", mv.df().schema.fields)
         for name in sorted(self.views):
@@ -5707,7 +5690,7 @@ class Catalog:
         here)."""
         if not re.search(r"\bDEFAULT\b", body, re.IGNORECASE):
             return body
-        targets = cols or [f.name for f in self.tables[name].df().schema.fields]
+        targets = cols or self.tables[name].schema.names
         dfl = self.table_defaults.get(name, {})
         folded = _map_values_items(
             body,
@@ -5786,7 +5769,7 @@ class Catalog:
             # PG: COPY without a column list expects the file WITHOUT
             # generated columns (they cannot be copied to)
             fields = [
-                f for f in table.df().schema.fields
+                f for f in table.schema.fields
                 if (f.name in cols if cols else f.name not in genc)
             ]
             from pyspark.sql.types import StructType

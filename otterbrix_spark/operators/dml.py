@@ -19,6 +19,17 @@ plain parquet, exactly what Delta/Iceberg avoid with copy-on-write file-level
 rewrites; the class documents that seam and keeps the API identical so a
 Delta-backed implementation is a drop-in. Constraint checks are distributed
 validation joins (anti-join against parent keys), never driver-side loops.
+
+Schema memo: a table's schema is remembered per table VERSION instead of
+re-inferred from parquet footers on every read (each inference is a Spark
+job). The version key is ``(st_ino, st_mtime_ns)`` of the table directory:
+any file landing in or leaving the directory moves its mtime, and a swap
+(``commit_staged``) installs a different directory, so another engine's
+write, an ALTER or a rewrite always misses the memo and re-infers once.
+An INSERT appends rows already cast to the memoised schema, so the
+version it produces has that same schema; it records the new key under
+``table_write_lock`` and the next read skips inference. Reads then pass
+the memo to ``spark.read.schema(...)``, which lists files but runs no job.
 """
 
 from __future__ import annotations
@@ -30,7 +41,8 @@ import tempfile
 import uuid
 from contextlib import contextmanager
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 
 class ConstraintViolation(Exception):
@@ -83,19 +95,43 @@ class ManagedTable:
         self._staged: str | None = None
         self.partition_cols = list(partition_cols or [])
         self.schema_ddl = schema_ddl
+        # (version key, schema) of the last version read — see the module
+        # docstring; a pinned partitioned schema is keyed by its DDL
+        self._memo: "tuple[object, StructType] | None" = None
 
     # -- scan ---------------------------------------------------------------
-    def df(self) -> DataFrame:
-        if self.partition_cols and self.schema_ddl:
-            from pyspark.sql.types import StructType
+    def _pinned(self) -> bool:
+        return bool(self.partition_cols and self.schema_ddl)
 
-            schema = StructType.fromDDL(self.schema_ddl)
-            return (
-                self.spark.read.schema(schema)
-                .parquet(self.path)
-                .select(*[f.name for f in schema.fields])
-            )
-        return self.spark.read.parquet(self.path)
+    def _version(self) -> object:
+        if self._pinned():
+            return self.schema_ddl
+        st = os.stat(self.path)
+        return (st.st_ino, st.st_mtime_ns)
+
+    @property
+    def schema(self) -> StructType:
+        """The schema a read of the current version has, inferred once per
+        version (the same schema ``spark.read.parquet`` would return)."""
+        key = self._version()
+        if self._memo is None or self._memo[0] != key:
+            if self._pinned():
+                pinned = StructType.fromDDL(self.schema_ddl)
+                schema = (
+                    self.spark.read.schema(pinned).parquet(self.path)
+                    .select(*pinned.names).schema
+                )
+            else:
+                schema = self.spark.read.parquet(self.path).schema
+            self._memo = (key, schema)
+        return self._memo[1]
+
+    def df(self) -> DataFrame:
+        schema = self.schema
+        df = self.spark.read.schema(schema).parquet(self.path)
+        # a partitioned read puts partition columns last: restore the
+        # declared order
+        return df.select(*schema.names) if self._pinned() else df
 
     def exists(self) -> bool:
         return os.path.isdir(self.path) and any(
@@ -131,21 +167,33 @@ class ManagedTable:
         """INSERT FROM SELECT / VALUES: append write, with rows aligned AND
         cast to the table schema (a typed table accepts narrower literals —
         reference operator_insert coerces on write). RETURNING = the
-        inserted frame (reference returns the inserted rows)."""
-        if self.exists():
-            rows = rows.select(
-                *[
-                    F.col(f.name).cast(f.dataType).alias(f.name)
-                    for f in self.df().schema.fields
-                ]
-            )
-        count = rows.count()
+        inserted frame (reference returns the inserted rows); otherwise the
+        row count, observed on the write itself so the source runs once."""
         with table_write_lock(self.path):
-            writer = rows.write.mode("append")
+            # a partitioned table has no top-level part file, but its
+            # pinned schema is known: cast to it too, or a narrower literal
+            # lands with a parquet type every later read rejects
+            schema = self.schema if self._pinned() or self.exists() else None
+            if schema is not None:
+                rows = rows.select(
+                    *[
+                        F.col(f.name).cast(f.dataType).alias(f.name)
+                        for f in schema.fields
+                    ]
+                )
+            observed = Observation()
+            writer = rows.observe(
+                observed, F.count(F.lit(1)).alias("rows")
+            ).write.mode("append")
             if self.partition_cols:
                 writer = writer.partitionBy(*self.partition_cols)
             writer.parquet(self.path)
-        return self.df_of(rows) if returning else count
+            # the appended files hold exactly ``schema`` (cast + alias keep
+            # names and types; field metadata is not carried, so a schema
+            # with metadata is left to re-infer)
+            if schema is not None and not any(f.metadata for f in schema):
+                self._memo = (self._version(), schema)
+        return self.df_of(rows) if returning else observed.get["rows"]
 
     @staticmethod
     def df_of(rows: DataFrame) -> DataFrame:

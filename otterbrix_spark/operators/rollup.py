@@ -40,10 +40,22 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 _Q = 10000.0
 
 
+def _floor_to(expr: str, width: int) -> str:
+    """SQL flooring ``expr`` (integer micros) to a multiple of ``width``.
+    A time bucket floors: 1969-12-31 23:30 is in the hour starting at
+    23:00, not in the one starting at 1970-01-01 00:00 that integer
+    ``DIV`` (which truncates toward zero) would give it. ``pmod`` is
+    never negative, so this matches Python's ``//`` used by ``_chunk_of``
+    and the oracles' ``date_trunc``."""
+    return f"({expr} - pmod({expr}, {width}))"
+
+
 def _bucketed(events: DataFrame, bucket_hours: int) -> DataFrame:
     bucket_us = bucket_hours * 3_600_000_000
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    return events.withColumn("bucket_us", F.expr(f"unix_micros(CAST(ts AS TIMESTAMP)) DIV {bucket_us} * {bucket_us}"))
+    return events.withColumn(
+        "bucket_us",
+        F.expr(_floor_to("unix_micros(CAST(ts AS TIMESTAMP))", bucket_us)),
+    )
 
 
 def _aggregate(bucketed: DataFrame, group_col: str = "event_type") -> DataFrame:
@@ -95,8 +107,7 @@ class ContinuousAggregate:
 
     def _chunked(self, agg: DataFrame) -> DataFrame:
         return agg.withColumn(
-            "chunk_us",
-            F.expr(f"bucket_us DIV {self.chunk_us} * {self.chunk_us}"),
+            "chunk_us", F.expr(_floor_to("bucket_us", self.chunk_us))
         )
 
     def build(self, source: DataFrame) -> None:
@@ -222,9 +233,7 @@ class CoarsenedAggregate:
 
     def _coarsen(self, fine: DataFrame) -> DataFrame:
         bucket_us = self.bucket_hours * 3_600_000_000
-        day = F.expr(
-            f"CAST(bucket_us AS BIGINT) DIV {bucket_us} * {bucket_us}"
-        )
+        day = F.expr(_floor_to("CAST(bucket_us AS BIGINT)", bucket_us))
         return (
             fine.groupBy(day.alias("coarse_us"), "event_type")
             .agg(F.sum("n").alias("n"), F.sum("qsum").alias("qsum"))

@@ -16,13 +16,21 @@ reference's "pick the branch whose type matches, no conversion" contract.
 Scale notes: batches are parquet appends (no rewrite); the union-schema read
 is a per-batch projection, no shuffle; on a lake deployment the same policy
 is Delta `mergeSchema=true`.
+
+Schema memo: a ``batch-NNNNNN`` directory is written once and never
+changed, so its inferred schema is remembered under ``(dir, st_ino,
+st_mtime_ns)`` and each batch pays one footer-inference job in its
+lifetime instead of two per read; reads pass the memo to
+``spark.read.schema(...)``. A batch removed by DROP TABLE and written
+again under the same name is a new directory (new inode, or a reused
+inode with a later mtime), so it misses the memo and is inferred afresh.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 
 
 def _merge_type(a: T.DataType, b: T.DataType) -> T.DataType:
@@ -56,6 +64,8 @@ class DynamicTable:
         self.spark = spark
         self.path = path
         os.makedirs(path, exist_ok=True)
+        # (batch dir, st_ino, st_mtime_ns) -> schema; see the module docstring
+        self._schemas: dict[tuple, T.StructType] = {}
 
     def _batch_dirs(self) -> list[str]:
         return sorted(
@@ -64,9 +74,10 @@ class DynamicTable:
             if d.startswith("batch-")
         )
 
-    def insert(self, batch: DataFrame) -> None:
+    def insert(self, batch: DataFrame) -> int:
         """Append one batch; new columns extend the table schema (the
         reference's PHYSICAL_ADD_COLUMN), missing columns read as NULL.
+        Returns the batch's row count, observed on the write itself.
 
         The list-then-write is serialized under the same flock the
         managed-table swap uses: two concurrent inserters would
@@ -74,35 +85,65 @@ class DynamicTable:
         different schemas in one directory (self-review r13 pass 3)."""
         from otterbrix_spark.operators.dml import table_write_lock
 
+        observed = Observation()
         with table_write_lock(self.path):
             n = len(self._batch_dirs())
-            batch.write.parquet(os.path.join(self.path, f"batch-{n:06d}"))
+            batch.observe(observed, F.count(F.lit(1)).alias("rows")).write.parquet(
+                os.path.join(self.path, f"batch-{n:06d}")
+            )
+        return observed.get["rows"]
 
-    def _sources(self, extra: "tuple | list" = ()) -> list[DataFrame]:
-        """Written batch frames plus any STAGED (uncommitted) batches —
-        the transactional read-your-writes seam: a txn's pending inserts
-        participate in the union-schema read without touching disk."""
+    def _batch_schemas(self) -> list[tuple[str, T.StructType]]:
+        """(directory, schema) of every written batch, inferring only the
+        batches the memo has not seen (and forgetting vanished ones)."""
+        memo = {}
+        for d in self._batch_dirs():
+            st = os.stat(d)
+            key = (d, st.st_ino, st.st_mtime_ns)
+            if key not in self._schemas:
+                self._schemas[key] = self.spark.read.parquet(d).schema
+            memo[key] = self._schemas[key]
+        self._schemas = memo
+        return [(d, schema) for (d, _, _), schema in memo.items()]
+
+    def _sources(
+        self, extra: "tuple | list" = ()
+    ) -> list[tuple[DataFrame, T.StructType]]:
+        """(frame, schema) of the written batches plus any STAGED
+        (uncommitted) batches — the transactional read-your-writes seam: a
+        txn's pending inserts participate in the union-schema read without
+        touching disk."""
         return [
-            self.spark.read.parquet(d) for d in self._batch_dirs()
-        ] + list(extra)
+            (self.spark.read.schema(schema).parquet(d), schema)
+            for d, schema in self._batch_schemas()
+        ] + [(b, b.schema) for b in extra]
 
-    def schema(self, extra: "tuple | list" = ()) -> T.StructType:
+    @staticmethod
+    def _merge(schemas: "list[T.StructType]") -> T.StructType:
         """Union schema in first-seen column order with widening."""
         fields: dict[str, T.DataType] = {}
-        for b in self._sources(extra):
-            for f in b.schema:
+        for schema in schemas:
+            for f in schema:
                 if f.name in fields:
                     fields[f.name] = _merge_type(fields[f.name], f.dataType)
                 else:
                     fields[f.name] = f.dataType
         return T.StructType([T.StructField(n, t, True) for n, t in fields.items()])
 
+    def schema(self, extra: "tuple | list" = ()) -> T.StructType:
+        """Union schema in first-seen column order with widening."""
+        return self._merge(
+            [schema for _, schema in self._batch_schemas()]
+            + [b.schema for b in extra]
+        )
+
     def df(self, extra: "tuple | list" = ()) -> DataFrame:
         """Read the union of all batches under the merged schema."""
-        target = self.schema(extra)
+        sources = self._sources(extra)
+        target = self._merge([schema for _, schema in sources])
         out: DataFrame | None = None
-        for b in self._sources(extra):
-            have = {f.name: f.dataType for f in b.schema}
+        for b, schema in sources:
+            have = {f.name: f.dataType for f in schema}
             cols = []
             for f in target:
                 if f.name not in have:
@@ -135,10 +176,11 @@ class DynamicTable:
             T.ByteType(), T.ShortType(), T.IntegerType(), T.LongType(),
             T.FloatType(), T.DoubleType(),
         }
-        merged = self.schema()
+        sources = self._sources()
+        merged = self._merge([schema for _, schema in sources])
         out: DataFrame | None = None
-        for b in self._sources():
-            have = {f.name: f.dataType for f in b.schema}
+        for b, schema in sources:
+            have = {f.name: f.dataType for f in schema}
             if col_name not in have:
                 continue
             casted = F.col(col_name).try_cast(dtype)

@@ -217,7 +217,9 @@ _ROWS_PER_CACHE_PARTITION = 8192
 
 def _table_rows(sf_dir: str, name: str) -> int | None:
     """Row count from the parquet FOOTER (driver metadata read, no data
-    scan); None when unreadable (caller falls back to the base width)."""
+    scan); None when unreadable or 0 — a directory whose part files sit
+    in nested or odd subdirectories globs to nothing, and its size is
+    unknown, not empty — so the caller falls back to the base width."""
     import glob as _glob
 
     import pyarrow.parquet as pq
@@ -225,13 +227,15 @@ def _table_rows(sf_dir: str, name: str) -> int | None:
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
         if os.path.isdir(path):
-            return sum(
+            rows = sum(
                 pq.ParquetFile(f).metadata.num_rows
                 for f in _glob.glob(os.path.join(path, "*.parquet"))
             )
-        return pq.ParquetFile(path).metadata.num_rows
+        else:
+            rows = pq.ParquetFile(path).metadata.num_rows
     except Exception:
         return None
+    return rows or None
 
 
 def _cluster_width(

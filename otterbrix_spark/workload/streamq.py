@@ -241,13 +241,28 @@ def s06(spark: SparkSession, sf_dir: str) -> DataFrame:
 _S07_ORACLE = _S03_ORACLE
 
 
+def _only_part_file(directory: str) -> str:
+    """The single ``part-*.parquet`` file of a one-file write. Landing
+    directories are built by moving these files, so a write that produced
+    none or several (a layout change upstream) must fail loudly, not
+    silently land a fraction of the rows."""
+    import glob
+    import os
+
+    files = glob.glob(os.path.join(directory, "part-*.parquet"))
+    if len(files) != 1:
+        raise RuntimeError(
+            f"expected exactly one part file in {directory}, found {len(files)}"
+        )
+    return files[0]
+
+
 def _sliced_events_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
     """Write the events corpus as ``<scratch>/events.parquet/part-000i``
     files sliced into contiguous, ascending event-time ranges (names AND
     mtimes ascending — the file-stream source orders by both). Harness-side
     corpus prep, not part of the streaming graph: it stands in for the
     landing directory a real ingest pipeline appends in event-time order."""
-    import glob
     import os
     import shutil
 
@@ -268,10 +283,10 @@ def _sliced_events_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) -> st
         ev.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(scratch, "slice_empty")
         )
-        files = glob.glob(
-            os.path.join(scratch, "slice_empty", "part-*.parquet")
+        shutil.move(
+            _only_part_file(os.path.join(scratch, "slice_empty")),
+            os.path.join(out, "part-0000.parquet"),
         )
-        shutil.move(files[0], os.path.join(out, "part-0000.parquet"))
         return scratch
     width = max(1, (int(hi) - int(lo)) // n_files + 1)
     # Round-14 (guide §2.6/§6): ONE partitioned write replaces the former
@@ -296,11 +311,11 @@ def _sliced_events_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) -> st
         .parquet(tmp)
     )
     for i in range(n_files):
-        files = glob.glob(os.path.join(tmp, f"_slice={i}", "part-*.parquet"))
-        if not files:  # empty time slice: nothing to land
+        slice_dir = os.path.join(tmp, f"_slice={i}")
+        if not os.path.isdir(slice_dir):  # empty time slice: nothing to land
             continue
         dst = os.path.join(out, f"part-{i:04d}.parquet")
-        shutil.move(files[0], dst)
+        shutil.move(_only_part_file(slice_dir), dst)
         os.utime(dst, (1_700_000_000 + i * 60, 1_700_000_000 + i * 60))
     return scratch
 
@@ -321,7 +336,6 @@ def _append_sentinel_slices(
     filter them back out. The SECOND slice flushes whatever state the
     first one's watermark advance released — outer joins and chained
     aggregations both need that extra turn of the crank."""
-    import glob
     import os
     import shutil
 
@@ -363,7 +377,7 @@ def _append_sentinel_slices(
         .parquet(tmp)
     )
     for i in range(len(offsets_h)):
-        src = glob.glob(os.path.join(tmp, f"_sent={i}", "part-*.parquet"))[0]
+        src = _only_part_file(os.path.join(tmp, f"_sent={i}"))
         dst = os.path.join(out, f"part-9{i:03d}.parquet")
         shutil.move(src, dst)
         os.utime(dst, (1_800_000_000 + i * 60, 1_800_000_000 + i * 60))
@@ -1044,7 +1058,7 @@ def _jittered_dup_landing_dir(spark: SparkSession, sf_dir: str) -> str:
         )
         tmp_i = os.path.join(scratch, f"jitter_{i}")
         shifted.coalesce(1).write.mode("overwrite").parquet(tmp_i)
-        src = glob.glob(os.path.join(tmp_i, "part-*.parquet"))[0]
+        src = _only_part_file(tmp_i)
         dup = f[: -len(".parquet")] + "b.parquet"
         shutil.move(src, dup)
         st = os.stat(f)
@@ -1321,7 +1335,6 @@ ORDER BY hour_us, event_type
         "result still equals the batch rollup over the on-time corpus",
 )
 def s20(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
     import os
     import shutil
 
@@ -1343,11 +1356,9 @@ def s20(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         tmp = os.path.join(landing, "late_replay")
         late.coalesce(1).write.mode("overwrite").parquet(tmp)
-        files = glob.glob(os.path.join(tmp, "part-*.parquet"))
-        if files:
-            dst = os.path.join(out, "part-8000.parquet")
-            shutil.move(files[0], dst)
-            os.utime(dst, (1_750_000_000, 1_750_000_000))
+        dst = os.path.join(out, "part-8000.parquet")
+        shutil.move(_only_part_file(tmp), dst)
+        os.utime(dst, (1_750_000_000, 1_750_000_000))
 
     _append_sentinel_slices(spark, sf_dir, landing, ("__sentinel__",))
     stream = events_stream(spark, landing, max_files_per_trigger=1)
@@ -2063,7 +2074,6 @@ GROUP BY n_anc ORDER BY n_anc
         "closure of the union per the recursive oracle",
 )
 def s25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
     import os
     import shutil
     import time as _time
@@ -2085,9 +2095,8 @@ def s25(spark: SparkSession, sf_dir: str) -> DataFrame:
         part = edges.filter(F.col("node") % 3 == i)
         tmp_i = os.path.join(scratch, f"slice_{i}")
         part.coalesce(1).write.mode("overwrite").parquet(tmp_i)
-        files = glob.glob(os.path.join(tmp_i, "part-*.parquet"))
         dst = os.path.join(out, f"part-{i:04d}.parquet")
-        shutil.move(files[0], dst)
+        shutil.move(_only_part_file(tmp_i), dst)
         os.utime(dst, (1_700_000_000 + i * 60, 1_700_000_000 + i * 60))
 
     state: dict = {"closure": None, "batches": 0}
@@ -2175,9 +2184,7 @@ def s26(spark: SparkSession, sf_dir: str) -> DataFrame:
         part = edges.filter(F.col("node") % 4 == i)
         tmp_i = os.path.join(scratch, f"slice_{i}")
         part.coalesce(1).write.mode("overwrite").parquet(tmp_i)
-        slices.append(
-            glob.glob(os.path.join(tmp_i, "part-*.parquet"))[0]
-        )
+        slices.append(_only_part_file(tmp_i))
     landing = os.path.join(scratch, "edges.parquet")
     os.makedirs(landing)
     state_dir = os.path.join(scratch, "closure_state")

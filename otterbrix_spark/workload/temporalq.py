@@ -193,7 +193,7 @@ def rj01(spark: SparkSession, sf_dir: str) -> DataFrame:
 # one-shot aggregate over ALL events. A passing row certifies the
 # maintenance invariant, not just one aggregation.
 _H01_ORACLE = """
-SELECT (epoch_us(ts) // 3600000000) * 3600000000 AS bucket_us,
+SELECT epoch_us(date_trunc('hour', ts)) AS bucket_us,
        event_type,
        CAST(COUNT(*) AS BIGINT) AS n,
        CAST(SUM(CAST(FLOOR(value * 10000.0) AS BIGINT)) AS BIGINT) AS qsum
@@ -1098,7 +1098,7 @@ def g03(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tail, and the daily table must equal the oracle's one-shot daily
 # aggregate over the full corpus.
 _H03_ORACLE = """
-SELECT (epoch_us(ts) // 86400000000) * 86400000000 AS coarse_us,
+SELECT epoch_us(date_trunc('day', ts)) AS coarse_us,
        event_type,
        CAST(COUNT(*) AS BIGINT) AS n,
        CAST(SUM(CAST(FLOOR(value * 10000.0) AS BIGINT)) AS BIGINT) AS qsum
@@ -1615,7 +1615,7 @@ def sk05(spark: SparkSession, sf_dir: str) -> DataFrame:
 # partition of ALL events. Oracle = the one-shot join+aggregate.
 
 _H04_ORACLE = """
-SELECT (epoch_us(ts) // 3600000000) * 3600000000 AS bucket_us,
+SELECT epoch_us(date_trunc('hour', ts)) AS bucket_us,
        COALESCE(c_nationkey, -1) AS seg,
        CAST(COUNT(*) AS BIGINT) AS n,
        CAST(SUM(CAST(FLOOR(value * 10000.0) AS BIGINT)) AS BIGINT) AS qsum

@@ -238,6 +238,24 @@ def test_persist_clustered_layout(spark, sf_dir):
         registry.drop_table_cache(spark)
 
 
+def test_cluster_width_of_nested_directory_is_base(spark, tmp_path):
+    """A table directory whose part files sit in a subdirectory has an
+    unknown size, not zero rows: the cache keeps the base width instead
+    of collapsing to one partition."""
+    from otterbrix_spark.sources import registry
+
+    spark.range(100).coalesce(1).write.parquet(str(tmp_path / "customer.parquet"))
+    nested = tmp_path / "nested"
+    spark.range(100).coalesce(1).write.parquet(
+        str(nested / "customer.parquet" / "day=1")
+    )
+    assert registry._table_rows(str(tmp_path), "customer") == 100
+    assert registry._table_rows(str(nested), "customer") is None
+    assert registry._cluster_width(spark, str(nested), "customer") == (
+        registry._cluster_width(spark)
+    )
+
+
 def test_cache_partitioning_elides_exchange(spark, sf_dir):
     """Round-13 optimization: cached plans are compiled AQE-off so
     InMemoryTableScan reports hashpartitioning(key, width) and consumers
